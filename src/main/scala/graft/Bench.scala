@@ -89,7 +89,15 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val smallCores = math.max(1, cpus / 4)
-    val tinyCores = math.max(1, cpus / 16)
+    // Pair A levels N and 4N, from the host: N = cpus/16 at 16+ cores (4N
+    // is then a quarter of the socket), else N = cpus/4 (1 vs 4 on 4
+    // cores). Below 4 cores no N vs 4N pair fits, and pair A reports null
+    // with this reason instead of a number.
+    val pairA: Either[String, (Int, Int)] = {
+      val n = if (cpus >= 16) cpus / 16 else cpus / 4
+      if (n >= 1) Right((n, 4 * n))
+      else Left(s"$cpus cores: an N vs 4N pair needs at least 4")
+    }
     val target = 320000
     val targetTiny = 160000
 
@@ -100,11 +108,12 @@ object Bench {
     // (anti-)scaling.
     def cooldown(): Unit = Thread.sleep(10000)
 
-    // Pair A (cluster proxy): N=cpus/16 vs 4N=cpus/4 cores, each measured
-    // in an isolated child JVM pinned to that processor count. Both levels
-    // stay far below the socket's core count, so neither run is limited by
-    // shared L3/memory bandwidth — like N vs 4N executors on SEPARATE
-    // machines. Measures framework + shuffle-free-pipeline scaling.
+    // Pair A (cluster proxy): N vs 4N cores (levels above), each measured
+    // in an isolated child JVM pinned to that processor count. From 16
+    // cores up both levels stay far below the socket's core count, so
+    // neither run is limited by shared L3/memory bandwidth — like N vs 4N
+    // executors on SEPARATE machines. Measures framework +
+    // shuffle-free-pipeline scaling.
     // Adjacent N->4N trials: an adjacent pair sees near-identical host
     // conditions, so per-trial efficiency is robust to the sandbox's
     // transient throttling (which recovers when idle — measured). A FIXED
@@ -120,17 +129,18 @@ object Bench {
     // The driver invokes Bench right after its correctness run — let the
     // host cool before the first (most load-bearing) trial rather than
     // inheriting whatever sustained load preceded the bench.
-    (1 to 6).foreach(_ => cooldown())
-    val ratio = smallCores.toDouble / tinyCores
-    val trials = (0 until 5).map { trial =>
-      if (trial > 0) { cooldown(); cooldown(); cooldown() }
-      val n = timeExtraction(tinyCores, sfDir, targetTiny)
-      val n4 = timeExtraction(smallCores, sfDir, targetTiny)
-      val eff = ((n4._1 / n4._2) / (n._1 / n._2)) / ratio
-      (n, n4, eff)
+    // per level pair: the 5 trials sorted by efficiency (median = index 2)
+    val trialsA = pairA.map { case (nCores, n4Cores) =>
+      (1 to 6).foreach(_ => cooldown())
+      val trials = (0 until 5).map { trial =>
+        if (trial > 0) { cooldown(); cooldown(); cooldown() }
+        val n = timeExtraction(nCores, sfDir, targetTiny)
+        val n4 = timeExtraction(n4Cores, sfDir, targetTiny)
+        val eff = ((n4._1 / n4._2) / (n._1 / n._2)) / (n4Cores.toDouble / nCores)
+        (n, n4, eff)
+      }.sortBy(_._3)(Ordering.Double.TotalOrdering)
+      (nCores, n4Cores, trials)
     }
-    val ((docsT, secT), (docsTm, secTm), effA) = trials.sortBy(_._3)(Ordering.Double.TotalOrdering)(2)
-    val effAll = trials.map(_._3)
 
     // Pair-B roofline: the same N vs 4N levels running the PURE kernel in
     // plain threads (no Spark at all). Whatever efficiency the hardware
@@ -227,15 +237,21 @@ object Bench {
     val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val total = results.map(_._3).sum
     val totalCold = results.map(_._2).sum
+    val clusterProxy = trialsA match {
+      case Right((nCores, n4Cores, trials)) =>
+        val ((docsT, secT), (docsTm, secTm), effA) = trials(2)
+        s"""{"cores_n":$nCores,"cores_4n":$n4Cores,""" +
+          s""""docs":$docsTm,"sec_n":${d(secT)},"sec_4n":${d(secTm)},""" +
+          s""""docs_per_sec_n":${d(docsT / secT)},"docs_per_sec_4n":${d(docsTm / secTm)},""" +
+          s""""efficiency":${d(effA)},""" +
+          s""""efficiency_trials":${trials.map(t => d(t._3)).mkString("[", ",", "]")}}"""
+      case Left(reason) => s"""{"efficiency":null,"reason":"$reason"}"""
+    }
     val scaling = s"""{"cores_n":$smallCores,"cores_4n":$cpus,""" +
       s""""docs":$docsB,"sec_n":${d(secS)},"sec_4n":${d(secB)},""" +
       s""""docs_per_sec_n":${d(thrS)},"docs_per_sec_4n":${d(thrB)},""" +
       s""""efficiency":${d(efficiency)},""" +
-      s""""cluster_proxy":{"cores_n":$tinyCores,"cores_4n":$smallCores,""" +
-      s""""docs":$docsTm,"sec_n":${d(secT)},"sec_4n":${d(secTm)},""" +
-      s""""docs_per_sec_n":${d(docsT / secT)},"docs_per_sec_4n":${d(docsTm / secTm)},""" +
-      s""""efficiency":${d(effA)},""" +
-      s""""efficiency_trials":${effAll.map(d).mkString("[", ",", "]")}},""" +
+      s""""cluster_proxy":$clusterProxy,""" +
       s""""roofline":{"cores_n":$smallCores,"cores_4n":$cpus,""" +
       s""""docs_per_sec_n":${d(rThrS)},"docs_per_sec_4n":${d(rThrB)},""" +
       s""""efficiency":${d(roofline)},""" +
@@ -262,16 +278,24 @@ object Bench {
       "host conditions within a trial), FIRST in the bench — the coolest " +
       "host window. A FIXED 5 trials run with cooldowns " +
       "and the MEDIAN-efficiency trial is reported (all trial efficiencies: " +
-      effAll.map(d).mkString(", ") + ") — an unbiased estimator, unlike " +
-      "max-until-pass. Pair A keeps both levels far below the socket's " +
-      "32 cores, so neither run contends for shared L3/memory bandwidth — the " +
-      "faithful stand-in for N vs 4N executors on separate machines. Pair B's " +
+      trialsA.fold(_ => "none", _._3.map(t => d(t._3)).mkString(", ")) +
+      ") — an unbiased estimator, unlike " +
+      "max-until-pass. From 16 cores up pair A keeps both levels far below " +
+      "the socket's core count, so neither run contends for shared L3/memory " +
+      "bandwidth — the faithful stand-in for N vs 4N executors on separate " +
+      "machines; below 16 cores its 4N level is the whole host. Pair B's " +
       "4N level saturates the whole socket and additionally absorbs shared-" +
       "bandwidth contention that a real multi-machine cluster would not see.\n\n")
     md.append("| pair | parallelism | docs | wall sec | docs/sec | efficiency |\n")
     md.append("|---|---|---|---|---|---|\n")
-    md.append(s"| A (cluster proxy) | local[$tinyCores] (N) | $docsT | ${d(secT)} | ${d(docsT / secT)} | |\n")
-    md.append(s"| A (cluster proxy) | local[$smallCores] (4N) | $docsTm | ${d(secTm)} | ${d(docsTm / secTm)} | **${d(effA)}** |\n")
+    trialsA match {
+      case Right((nCores, n4Cores, trials)) =>
+        val ((docsT, secT), (docsTm, secTm), effA) = trials(2)
+        md.append(s"| A (cluster proxy) | local[$nCores] (N) | $docsT | ${d(secT)} | ${d(docsT / secT)} | |\n")
+        md.append(s"| A (cluster proxy) | local[$n4Cores] (4N) | $docsTm | ${d(secTm)} | ${d(docsTm / secTm)} | **${d(effA)}** |\n")
+      case Left(reason) =>
+        md.append(s"| A (cluster proxy) | not run: $reason | | | | **n/a** |\n")
+    }
     md.append(s"| B (same-socket) | local[$smallCores] (N) | $docsS | ${d(secS)} | ${d(thrS)} | |\n")
     md.append(s"| B (same-socket) | local[$cpus] (4N) | $docsB | ${d(secB)} | ${d(thrB)} | **${d(efficiency)}** |\n")
     md.append(s"| roofline (pure kernel, no Spark) | $smallCores threads (N) | $rDocsS | ${d(rSecS)} | ${d(rThrS)} | |\n")

@@ -114,15 +114,16 @@ object Extractor {
   /** Multi-page docs: <section class="page"> elements (shallowest wins);
     * the analog of the reference's slide explode (F2). */
   private def collectPages(root: Elem): Vector[Elem] = {
-    val out = new ArrayBuffer[Elem]()
-    def go(el: Elem): Unit = el.children.foreach {
-      case e: Elem =>
-        if (e.tag == "section" && hasClassToken(e, "page")) out += e
-        else go(e)
+    val out = Vector.newBuilder[Elem]
+    val walk = root.preOrder
+    walk.next() // the root itself is never a page
+    walk.foreach {
+      case e: Elem if e.tag == "section" && hasClassToken(e, "page") =>
+        out += e
+        walk.skipChildren()
       case _ => ()
     }
-    go(root)
-    out.toVector
+    out.result()
   }
 
   private def hasClassToken(e: Elem, token: String): Boolean =
@@ -238,7 +239,7 @@ object Extractor {
     val subject = new Ranked; val category = new Ranked
     val lastModifiedBy = new Ranked
     val metaScope = head.getOrElse(dom)
-    (Iterator.single(metaScope) ++ metaScope.descendants).foreach { e =>
+    metaScope.subtree.foreach { e =>
       if (e.tag == "meta") {
         val name = e.attr("name").toLowerCase(java.util.Locale.ROOT)
         val prop = e.attr("property").toLowerCase(java.util.Locale.ROOT)
@@ -289,7 +290,7 @@ object Extractor {
 
   private[graft] def layoutTypesOf(body: Elem): String = {
     val seen = scala.collection.mutable.LinkedHashSet.empty[String]
-    (Iterator.single(body) ++ body.descendants).foreach { e =>
+    body.subtree.foreach { e =>
       if (landmarkTags.contains(e.tag)) seen += e.tag
     }
     seen.mkString(", ")

@@ -19,18 +19,26 @@ object StructureScore {
   private val actionWords =
     Array("create", "update", "check", "verify", "send", "receive", "analyze")
 
-  private val ArrowPattern =
-    java.util.regex.Pattern.compile("[\u2190\u2191\u2192\u2193\u2194\u21d0\u21d2\u21d4\u25b6\u25ba]|<->|->|=>")
-
-  /** Arrow tokens in flowed text — the A2 connector-arrow analog. The regex
-    * alternation is longest-first at each position, so "<->" never double-
-    * counts its "->" suffix. */
+  /** Arrow tokens in flowed text — the A2 connector-arrow analog: an arrow
+    * glyph, "<->", "->" or "=>", counted left to right without overlap
+    * (the leftmost-first alternation `[glyphs]|<->|->|=>`). "<->" counts
+    * once through the "->" it contains, and no token starts with '<'
+    * otherwise, so the scan needs no case of its own for it. */
   def countArrows(s: String): Int = {
-    if (s == null || s.isEmpty) return 0
-    val m = ArrowPattern.matcher(s)
-    var n = 0
-    while (m.find()) n += 1
-    n
+    if (s == null) return 0
+    val n = s.length
+    var count = 0
+    var i = 0
+    while (i < n) {
+      val len = s.charAt(i) match {
+        case '\u2190' | '\u2191' | '\u2192' | '\u2193' | '\u2194' |
+             '\u21d0' | '\u21d2' | '\u21d4' | '\u25b6' | '\u25ba' => 1
+        case '-' | '=' if i + 1 < n && s.charAt(i + 1) == '>' => 2
+        case _ => 0
+      }
+      if (len > 0) { count += 1; i += len } else i += 1
+    }
+    count
   }
 
   /** Char size of a block — the 1-D "area" analog used for positions and
@@ -60,47 +68,80 @@ object StructureScore {
     * for spread, 500K left-variance for the single-column penalty. */
   def scorePage(page: PageBlocks): PageScore = {
     val blocks = page.blocks
-    val textBlocks = blocks.collect { case t: TextBlock => t }
+
+    // One pass over the blocks and their paragraphs gathers every
+    // aggregate the rules read. Positioned "elements" mirror the
+    // reference's shapes: every non-empty paragraph is one element (text
+    // boxes), every non-empty non-text block is one. An element's top is
+    // the chars of the elements before it * 5715, so tops only grow from 0;
+    // its left is its bullet level * 457200.
+    var elems = 0
+    var offset = 0L
+    var lastTop = 0L
+    var minLeft = Long.MaxValue; var maxLeft = Long.MinValue
+    var sizeSum = 0; var minSize = Int.MaxValue; var maxSize = Int.MinValue
+    def element(chars: Int, left: Long): Unit = {
+      lastTop = offset * 5715L
+      offset += chars
+      minLeft = math.min(minLeft, left); maxLeft = math.max(maxLeft, left)
+      sizeSum += chars
+      minSize = math.min(minSize, chars); maxSize = math.max(maxSize, chars)
+      elems += 1
+    }
+    var kinds = 0 // bit set of the block kinds present
+    var arrows = 0
+    var textBlocks = 0; var shortBlocks = 0
+    var titleCount = 0; var subtitleCount = 0; var contentCount = 0
+    var totalParas = 0; var longTextCount = 0; var bulletCount = 0
+    val allText = new StringBuilder // ' ' + lowercase text of each paragraph
+    blocks.foreach {
+      case t: TextBlock =>
+        kinds |= 1
+        textBlocks += 1
+        t.role match {
+          case "title"    => titleCount += 1
+          case "subtitle" => subtitleCount += 1
+          case "content"  => contentCount += 1
+          case _          => ()
+        }
+        var paras = 0; var words = 0
+        t.paragraphs.foreach { p =>
+          val text = p.cleanText
+          allText.append(' ').append(text.toLowerCase(java.util.Locale.ROOT))
+          if (text.nonEmpty) {
+            element(text.length, math.max(p.hints.bulletLevel, 0).toLong * 457200L)
+            arrows += countArrows(text)
+            val w = TextStats.wordCount(text)
+            paras += 1; words += w
+            if (w > 20) longTextCount += 1
+            if (p.hints.isBullet) bulletCount += 1
+          }
+        }
+        totalParas += paras
+        if (paras > 0 && words.toDouble / paras <= 5) shortBlocks += 1
+      case b =>
+        kinds |= (b match {
+          case _: TableBlock => 2
+          case _: ImageBlock => 4
+          case _             => 8
+        })
+        val c = blockChars(b)
+        if (c > 0) element(c, 0L)
+    }
+
     val reasons = Vector.newBuilder[String]
     var score = 0
-
-    // positioned "elements" mirror the reference's shapes: every paragraph
-    // is one element (text boxes), non-text blocks are one element each
-    val elems: Vector[(Int, Long)] = blocks.flatMap {
-      case t: TextBlock =>
-        t.paragraphs.iterator.filter(_.cleanText.nonEmpty).map(p =>
-          (p.cleanText.length,
-            math.max(p.hints.bulletLevel, 0).toLong * 457200L)).toVector
-      case b =>
-        val c = blockChars(b)
-        if (c > 0) Vector((c, 0L)) else Vector.empty
-    }
-    val positions: Vector[(Long, Long)] = {
-      var off = 0L
-      elems.map { case (chars, left) =>
-        val top = off * 5715L
-        off += chars
-        (top, left)
-      }
-    }
 
     // Rule 1 (A2 analog): connector ARROWS exist in flowed text as arrow
     // glyphs/digraphs (→, ⇒, ->, => ...) — counted across paragraph text
     // (diagram_analyzer.py:407-413). Standalone connector LINES have no
     // DOM analog and stay 0 (documented skip).
-    val arrows = {
-      var n = 0
-      textBlocks.foreach(_.paragraphs.foreach { p =>
-        n += StructureScore.countArrows(p.cleanText)
-      })
-      n
-    }
     if (arrows > 0) { score += 20; reasons += s"block_arrows:$arrows" }
 
     // Rule 2: line-to-shape ratio, lines = 0 so ratio = arrows/shapes
     // (diagram_analyzer.py:416-421)
-    if (elems.nonEmpty) {
-      val lineRatio = arrows.toDouble / elems.size
+    if (elems > 0) {
+      val lineRatio = arrows.toDouble / elems
       if (lineRatio >= 0.5) {
         score += 15
         // Python :.1f is round-half-even (ADVICE r2) — ported via pyFormat1f
@@ -108,15 +149,16 @@ object StructureScore {
       }
     }
 
-    // Rule 3 (A3): spatial layout (diagram_analyzer.py:515-548)
-    if (positions.size >= 3) {
-      val tops = positions.map(_._1)
-      val lefts = positions.map(_._2)
-      val uniqueTops = tops.map(t => math.round(t / 100000.0)).distinct.size
-      val uniqueLefts = lefts.map(l => math.round(l / 100000.0)).distinct.size
-      if (uniqueTops >= 2 && uniqueLefts >= 2) {
+    // Rule 3 (A3): spatial layout (diagram_analyzer.py:515-548). Rounding
+    // is monotone, so positions round to two or more distinct 100K buckets
+    // exactly when the smallest and the largest do; the smallest top is 0.
+    if (elems >= 3) {
+      def bucket(v: Long): Long = math.round(v / 100000.0)
+      val multiTop = bucket(0L) != bucket(lastTop)
+      val multiLeft = bucket(minLeft) != bucket(maxLeft)
+      if (multiTop && multiLeft) {
         score += 15; reasons += "layout:grid_layout"
-      } else if (tops.max - tops.min > 1000000L && lefts.max - lefts.min > 1000000L) {
+      } else if (lastTop > 1000000L && maxLeft - minLeft > 1000000L) {
         score += 10; reasons += "layout:spread_layout"
       } // linear_layout scores 0 and (like the reference) gets no tag
     }
@@ -124,18 +166,13 @@ object StructureScore {
     // Rule 4 (A4): variety = kind diversity + size consistency (:550-582)
     var varietyScore = 0
     if (blocks.size >= 2) {
-      val kinds = blocks.map {
-        case _: TextBlock  => "text"
-        case _: TableBlock => "table"
-        case _: ImageBlock => "image"
-        case _: ChartBlock => "chart"
-      }.distinct
-      if (kinds.size >= 3) varietyScore += 15
-      else if (kinds.size >= 2) varietyScore += 10
-      val sizes = elems.map(_._1)
-      if (sizes.size >= 3) {
-        val avg = sizes.sum.toDouble / sizes.size
-        if (avg > 0 && sizes.iterator.map(s => math.abs(s - avg) / avg).max < 0.5)
+      val kindCount = Integer.bitCount(kinds)
+      if (kindCount >= 3) varietyScore += 15
+      else if (kindCount >= 2) varietyScore += 10
+      if (elems >= 3) {
+        val avg = sizeSum.toDouble / elems
+        // the largest |size - avg| is at the smallest or the largest size
+        if (avg > 0 && math.max(math.abs(minSize - avg), math.abs(maxSize - avg)) / avg < 0.5)
           varietyScore += 5 // consistent sizing: process-flow indicator
       }
     }
@@ -143,57 +180,32 @@ object StructureScore {
 
     // Rule 5 (A5): text density — share of blocks whose avg words/para <= 5
     var textScore = 0
-    if (textBlocks.nonEmpty) {
-      val shortCount = textBlocks.count { b =>
-        val paras = b.paragraphs.filter(_.cleanText.nonEmpty)
-        paras.nonEmpty && {
-          val totalWords = paras.map(p => TextStats.wordCount(p.cleanText)).sum
-          totalWords.toDouble / paras.size <= 5
-        }
-      }
-      val ratio = shortCount.toDouble / textBlocks.size
+    if (textBlocks > 0) {
+      val ratio = shortBlocks.toDouble / textBlocks
       if (ratio >= 0.7) textScore = 10
       else if (ratio >= 0.5) textScore = 5
     }
     if (textScore > 0) { score += textScore; reasons += s"short_text:$textScore" }
 
     // Rule 6 (A6): flow vocabulary over concatenated lowercase text (:624-651)
-    val allText = {
-      val sb = new StringBuilder
-      textBlocks.foreach(_.paragraphs.foreach(p =>
-        sb.append(' ').append(p.cleanText.toLowerCase(java.util.Locale.ROOT))))
-      sb.toString
-    }
+    val lowerText = allText.toString
     var flowScore = 0
-    val flowMatches = flowKeywords.count(allText.contains)
-    val actionMatches = actionWords.count(allText.contains)
+    val flowMatches = flowKeywords.count(lowerText.contains)
+    val actionMatches = actionWords.count(lowerText.contains)
     if (flowMatches >= 2) flowScore += 20
     else if (flowMatches >= 1) flowScore += 10
     if (actionMatches >= 3) flowScore += 10
     // structural bonus: shapes connected by lines/arrows (:648-650)
-    if (elems.size >= 3 && arrows > 0) flowScore += 15
+    if (elems >= 3 && arrows > 0) flowScore += 15
     if (flowScore > 0) { score += flowScore; reasons += s"flow_pattern:$flowScore" }
 
     // Rule 7 (A7): negative indicators (:653-695), all three legs — long
     // paragraphs, bullet-heavy content, and the single-column left-variance
     // penalty via the positional analog
     var negScore = 0
-    var longTextCount = 0
-    var bulletCount = 0
-    var totalParas = 0
-    textBlocks.foreach(_.paragraphs.foreach { p =>
-      if (p.cleanText.nonEmpty) {
-        totalParas += 1
-        if (TextStats.wordCount(p.cleanText) > 20) longTextCount += 1
-        if (p.hints.isBullet) bulletCount += 1
-      }
-    })
     if (longTextCount >= 2) negScore -= 15
     if (totalParas > 0 && bulletCount.toDouble / totalParas > 0.8) negScore -= 10
-    if (positions.size >= 3) {
-      val lefts = positions.map(_._2)
-      if (lefts.max - lefts.min < 500000L) negScore -= 10 // single column
-    }
+    if (elems >= 3 && maxLeft - minLeft < 500000L) negScore -= 10 // single column
     if (negScore < 0) { score += negScore; reasons += s"negatives:$negScore" }
 
     // A8: probability bucketing (diagram_analyzer.py:697-706)
@@ -205,9 +217,8 @@ object StructureScore {
 
     PageScore(page.pageNumber, score, probability, reasons.result(),
       blockCount = blocks.size, bulletCount = bulletCount,
-      titleCount = textBlocks.count(_.role == "title"),
-      subtitleCount = textBlocks.count(_.role == "subtitle"),
-      contentCount = textBlocks.count(_.role == "content"))
+      titleCount = titleCount, subtitleCount = subtitleCount,
+      contentCount = contentCount)
   }
 
   /** All page scores (the sidecar carries every page; the reference's

@@ -42,9 +42,12 @@ object Entities {
     while (i < n) {
       val c = s.charAt(i)
       if (c == '&') {
-        val semi = s.indexOf(';', i + 1)
-        // entity names are short; cap the scan to avoid O(n^2) on stray '&'
-        if (semi > i && semi - i <= 12) {
+        // entity names are short: look for the ';' only within 12 chars, so
+        // a run of stray '&' costs O(n), not a scan to the end per '&'
+        val end = i + math.min(n - i, 13)
+        var semi = i + 1
+        while (semi < end && s.charAt(semi) != ';') semi += 1
+        if (semi < end) {
           val body = s.substring(i + 1, semi)
           if (body.startsWith("#")) {
             val numStr = body.substring(1)

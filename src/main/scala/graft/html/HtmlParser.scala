@@ -11,24 +11,56 @@ sealed trait Node
 final class Elem(val tag: String, val attrs: Map[String, String]) extends Node {
   val children: ArrayBuffer[Node] = new ArrayBuffer[Node]()
   def attr(name: String): String = attrs.getOrElse(name, "")
+  /** every node of the subtree, self first, in document order */
+  def preOrder: PreOrder = new PreOrder(this)
+  /** the subtree's elements, self first, in document order */
+  def subtree: Iterator[Elem] = preOrder.collect { case e: Elem => e }
   /** depth-first descendant elements, document order, self excluded */
-  def descendants: Iterator[Elem] = children.iterator.flatMap {
-    case e: Elem => Iterator.single(e) ++ e.descendants
-    case _       => Iterator.empty
-  }
-  def find(t: String): Option[Elem] =
-    if (tag == t) Some(this) else descendants.find(_.tag == t)
+  def descendants: Iterator[Elem] = subtree.drop(1)
+  def find(t: String): Option[Elem] = subtree.find(_.tag == t)
   /** concatenated decoded text of the subtree (raw, not normalized) */
   def rawText: String = {
     val sb = new StringBuilder
-    def go(n: Node): Unit = n match {
+    preOrder.foreach {
       case t: TextNode => sb.append(t.value)
-      case e: Elem     => e.children.foreach(go)
+      case _           => ()
     }
-    go(this); sb.toString
+    sb.toString
   }
 }
 final class TextNode(val value: String) extends Node
+
+/** Pre-order walk on an explicit stack: each node is pushed and popped
+  * once, so a whole-subtree pass is linear in its node count whatever the
+  * nesting depth. A node's children are pushed only when the walk moves
+  * past it, which lets `skipChildren()` prune the subtree of the node
+  * `next()` just returned.
+  */
+final class PreOrder(root: Node) extends Iterator[Node] {
+  private val stack = new java.util.ArrayDeque[Node]()
+  private var last: Node = null
+  stack.push(root)
+
+  /** do not descend into the node the last `next()` returned */
+  def skipChildren(): Unit = last = null
+
+  private def expandLast(): Unit = {
+    last match {
+      case e: Elem =>
+        var i = e.children.length - 1
+        while (i >= 0) { stack.push(e.children(i)); i -= 1 }
+      case _ => ()
+    }
+    last = null
+  }
+
+  def hasNext: Boolean = { expandLast(); !stack.isEmpty }
+  def next(): Node = {
+    expandLast()
+    last = stack.pop()
+    last
+  }
+}
 
 /** WHATWG-subset tokenizer + tree builder: tags, attributes
   * (quoted/unquoted/bare), decimal/hex/named entities, comments, doctype,
@@ -54,6 +86,15 @@ object HtmlParser {
     val n = html.length
     var i = 0
     val text = new StringBuilder
+    // open <p> elements on the stack: a block open tag closes a <p> only
+    // when one is open, so most block tags skip the stack scan entirely
+    var openP = 0
+
+    def popTo(j: Int): Unit = {
+      var k = j
+      while (k < stack.length) { if (stack(k).tag == "p") openP -= 1; k += 1 }
+      stack.remove(j, stack.length - j)
+    }
 
     def flushText(): Unit = {
       if (text.nonEmpty) {
@@ -73,7 +114,7 @@ object HtmlParser {
           else if (barrier.contains(t)) j = 0 // stop: don't cross the barrier
           j -= 1
         }
-        if (found > 0) stack.remove(found, stack.length - found)
+        if (found > 0) popTo(found)
       }
       tag match {
         case "li" => closeUpTo("li", Set("ul", "ol"))
@@ -83,7 +124,7 @@ object HtmlParser {
           closeUpTo("td", Set("tr", "table")); closeUpTo("th", Set("tr", "table"))
           closeUpTo("tr", Set("table"))
         case "option" => closeUpTo("option", Set("select"))
-        case t if pClosers.contains(t) => closeUpTo("p", Set("#root", "body"))
+        case t if openP > 0 && pClosers.contains(t) => closeUpTo("p", Set("#root", "body"))
         case _ => ()
       }
     }
@@ -115,7 +156,7 @@ object HtmlParser {
             var j = stack.length - 1
             var found = -1
             while (j > 0 && found < 0) { if (stack(j).tag == name) found = j; j -= 1 }
-            if (found > 0) stack.remove(found, stack.length - found)
+            if (found > 0) popTo(found)
             i = end + 1
           }
         } else if (c1.isLetter) {
@@ -184,6 +225,7 @@ object HtmlParser {
             }
           } else if (!selfClose && !voidTags.contains(tag)) {
             stack += el
+            if (tag == "p") openP += 1
           }
         } else { text.append(c); i += 1 }
       } else { text.append(c); i += 1 }

@@ -3,8 +3,8 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
-import graft.extract.Extractor
-import graft.html.HtmlParser
+import graft.extract.{Extractor, StructureScore}
+import graft.html.{Elem, Entities, HtmlParser, Node, TextNode}
 
 /** Property tests (SURVEY.md §5): the extractor is total, deterministic,
   * and its spans always form a sorted, non-overlapping index into the
@@ -114,6 +114,83 @@ class PropertySpec extends AnyFunSuite {
       val r = Extractor.extract(page.html, page.text)
       assert(r.error == null)
       assert(r.extractedText.nonEmpty)
+    }
+  }
+
+  // ---- linear-time kernel passes -----------------------------------------
+
+  /** best-of-`n` wall time of `f`, in ms (the first calls warm the JIT) */
+  private def bestMs(n: Int)(f: => Any): Double =
+    (1 to n).map { _ =>
+      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e6
+    }.min
+
+  test("descendants, find and rawText equal a recursive reference walk") {
+    def refDescendants(e: Elem): Vector[Elem] = e.children.toVector.flatMap {
+      case c: Elem => c +: refDescendants(c)
+      case _       => Vector.empty
+    }
+    def refRawText(n: Node): String = n match {
+      case t: TextNode => t.value
+      case e: Elem     => e.children.map(refRawText).mkString
+    }
+    val tags = Seq("body", "p", "div", "b", "li", "td", "table", "nav", "img", "nope")
+    forAll(htmlGen) { html =>
+      val root = HtmlParser.parse(html)
+      (root +: refDescendants(root)).foreach { e =>
+        val ref = refDescendants(e)
+        assert(e.descendants.toVector == ref)
+        assert(e.rawText == refRawText(e))
+        tags.foreach { t =>
+          assert(e.find(t) == (if (e.tag == t) Some(e) else ref.find(_.tag == t)))
+        }
+      }
+    }
+  }
+
+  test("a 100k-deep element chain parses, finds and walks in linear time") {
+    val depth = 100000
+    val deep = "<div>" * depth + "<span>x</span>" + "</div>" * depth
+    // the same elements and bytes, side by side instead of nested
+    val flat = "<div></div>" * depth + "<span>x</span>"
+    def pass(html: String): (Option[Elem], Int, String) = {
+      val dom = HtmlParser.parse(html)
+      (dom.find("span"), dom.descendants.size, dom.rawText)
+    }
+    val (span, count, text) = pass(deep)
+    assert(span.map(_.rawText).contains("x"))
+    assert(count == depth + 1 && text == "x")
+    val deepMs = bestMs(3)(pass(deep))
+    val flatMs = bestMs(3)(pass(flat))
+    assert(deepMs <= 5 * flatMs + 200, s"deep chain ${deepMs}ms vs flat ${flatMs}ms")
+  }
+
+  test("entity decoding is linear in the number of stray '&'") {
+    val n = 400000
+    val stray = "&" * n
+    // one '&' keeps plain text on the same char-by-char decode path
+    val plain = "a" * (n - 1) + "&"
+    assert(Entities.decode(stray) == stray)
+    assert(Entities.decode("&amp;" + "&" * 12 + "&lt;x&#65;") == "&" + "&" * 12 + "<xA")
+    val strayMs = bestMs(5)(Entities.decode(stray))
+    val plainMs = bestMs(5)(Entities.decode(plain))
+    assert(strayMs <= 20 * plainMs + 50, s"stray '&' ${strayMs}ms vs plain ${plainMs}ms")
+  }
+
+  test("countArrows equals the leftmost-first regex it replaced") {
+    val oracle = java.util.regex.Pattern.compile(
+      "[\u2190\u2191\u2192\u2193\u2194\u21d0\u21d2\u21d4\u25b6\u25ba]|<->|->|=>")
+    def regexCount(s: String): Int = {
+      val m = oracle.matcher(s)
+      var n = 0
+      while (m.find()) n += 1
+      n
+    }
+    val alphabet = Gen.oneOf('\u2190', '\u2191', '\u2192', '\u2193', '\u2194', '\u21d0',
+      '\u21d2', '\u21d4', '\u25b6', '\u25ba', '\u2195', '<', '-', '=', '>', 'a', 'Z', ' ',
+      '\ud83d', '\ude00')
+    forAll(Gen.listOf(alphabet).map(_.mkString), 20000) { s =>
+      assert(StructureScore.countArrows(s) == regexCount(s), s)
     }
   }
 
